@@ -1,7 +1,13 @@
 package graft.cube
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.operators.Pyramid
 
@@ -120,33 +126,46 @@ object CubeIngest {
     finally out.close()
   }
 
-  private def readMeta(path: String)
-      : Option[(CubeGrid, Seq[String],
-                Option[org.apache.spark.sql.types.StructType],
-                Seq[graft.cube.ExtraDim])] =
-    graft.sources.BlobStore.forStore(path).read("_graft_meta.json").map { b =>
-      val n = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new String(b, java.nio.charset.StandardCharsets.UTF_8))
-      val g = n.get("grid")
-      val vars = (0 until n.get("variables").size())
-        .map(n.get("variables").get(_).asText())
-      val schema = Option(n.get("schema")).flatMap(s =>
-        try Some(org.apache.spark.sql.types.DataType.fromJson(s.toString)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        catch { case scala.util.control.NonFatal(_) => None })
-      val extras = Option(n.get("extraDims")).map(e =>
-        (0 until e.size()).map { i =>
-          val d = e.get(i)
-          graft.cube.ExtraDim(d.get("name").asText(),
-            (0 until d.get("values").size())
-              .map(d.get("values").get(_).asDouble()),
-            Option(d.get("units")).map(_.asText()).getOrElse(""))
-        }.toSeq).getOrElse(Nil)
-      (CubeGrid(g.get("width").asInt(), g.get("height").asInt(),
-        g.get("lonMin").asDouble(), g.get("latMin").asDouble(),
-        g.get("res").asDouble(), g.get("latAscending").asBoolean()), vars,
-        schema, extras)
-    }
+  /** A store's `_graft_meta.json` as [[writeMeta]] wrote it — the one
+    * parser behind [[open]] and the direct tile reader
+    * (`ParquetWindow`). Fields parse independently: `extraDims` survive
+    * a missing grid or an unusable `layout`/`tileSize`, so the direct
+    * reader's 4-D refusal guard holds even for a store whose dense path
+    * it cannot use (else an extra=Nil read on a degenerate 4-D sidecar
+    * would silently overlay every plane). */
+  final case class Sidecar(grid: Option[CubeGrid], variables: Seq[String],
+                           schema: Option[StructType],
+                           extraDims: Seq[ExtraDim],
+                           tileSize: Int, layout: Int)
+
+  /** None when the store has no sidecar or it is not JSON. */
+  def readSidecar(path: String): Option[Sidecar] = {
+    def opt[T](f: => T): Option[T] =
+      try Option(f) catch { case NonFatal(_) => None }
+    def items(n: JsonNode): Seq[JsonNode] =
+      Option(n).map(a => (0 until a.size()).map(a.get)).getOrElse(Nil)
+    graft.sources.BlobStore.forStore(path).read("_graft_meta.json")
+      .flatMap(b => opt(new ObjectMapper().readTree(new String(b, UTF_8))))
+      .map { n =>
+        Sidecar(
+          grid = opt {
+            val g = n.get("grid")
+            CubeGrid(g.get("width").asInt(), g.get("height").asInt(),
+              g.get("lonMin").asDouble(), g.get("latMin").asDouble(),
+              g.get("res").asDouble(), g.get("latAscending").asBoolean())
+          },
+          variables = items(n.get("variables")).map(_.asText()),
+          schema = opt(DataType.fromJson(n.get("schema").toString)
+            .asInstanceOf[StructType]),
+          extraDims = opt(items(n.get("extraDims")).map(d =>
+            ExtraDim(d.get("name").asText(),
+              items(d.get("values")).map(_.asDouble()),
+              Option(d.get("units")).map(_.asText()).getOrElse(""))))
+            .getOrElse(Nil),
+          tileSize = Option(n.get("tileSize")).map(_.asInt).getOrElse(0),
+          layout = Option(n.get("layout")).map(_.asInt).getOrElse(1))
+      }
+  }
 
   /** Open a self-describing cube store: `.zarr` directories through the
     * live DSv2, parquet stores through the `_graft_meta.json` sidecar
@@ -160,20 +179,22 @@ object CubeIngest {
     val resolved = graft.sources.BlobStore.readFile(path + ".link")
       .map(b => new String(b, java.nio.charset.StandardCharsets.UTF_8).trim)
       .getOrElse(path)
-    val (grid, vars, schema, extras) = readMeta(resolved).getOrElse(
+    val meta = readSidecar(resolved).getOrElse(
       throw new IllegalArgumentException(
-        s"$resolved has no _graft_meta.json — written by an old ingest?"))
+        s"$resolved has no readable _graft_meta.json — written by an old ingest?"))
+    val grid = meta.grid.getOrElse(throw new IllegalArgumentException(
+      s"$resolved/_graft_meta.json has no readable grid"))
     // untransformed store read → the tile server may serve windows by
     // direct parquet reads (ParquetWindow), no Spark job; the time
     // axis comes from footer statistics where they pin it, and the
     // sidecar's recorded schema skips footer inference, so registration
     // (latestTime, timeCoords, WMTS dimensions) schedules no job at
     // all — the parity StoreOps gives zarr/NC stores
-    val reader = schema.fold(spark.read)(spark.read.schema)
-    CubeFrame(reader.parquet(resolved), grid, vars,
+    val reader = meta.schema.fold(spark.read)(spark.read.schema)
+    CubeFrame(reader.parquet(resolved), grid, meta.variables,
       timeAxis = graft.sources.ParquetWindow.statsTimeAxis(resolved)
         .map(_.map(graft.cube.Cube.timestampOfMicros)),
-      storePath = Some(resolved), extraDims = extras)
+      storePath = Some(resolved), extraDims = meta.extraDims)
   }
 
   /** Open all pyramid levels under `<path>` (level=k subdirs), finest

@@ -544,7 +544,4 @@ object HashF {
   def dsirBuckets(c: Column, buckets: Int): Column =
     GraftColumnBridge.column(DsirBuckets(
       GraftColumnBridge.expression(c), buckets))
-  def bitsetAndCount(a: Column, b: Column): Column =
-    GraftColumnBridge.column(BitsetAndCount(
-      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 }

@@ -20,7 +20,6 @@ final case class TileGrid(numLevels: Int,
   def numTilesY(level: Int): Int = numLevelZeroTilesY << level
   def width(level: Int): Int = numTilesX(level) * tileWidth
   def height(level: Int): Int = numTilesY(level) * tileHeight
-  def minLevel: Int = 0
   def maxLevel: Int = numLevels - 1
 }
 

@@ -113,14 +113,6 @@ object Places {
     features.filter(col(geomCol).isNotNull).filter(hits(col(geomCol)))
   }
 
-  /** Keep features whose GeoJSON geometry intersects the WKT query
-    * geometry — the generic FindPlaces predicate (places.py:74-94) over
-    * a loadGeoJson frame. The query geometry is closure-captured
-    * (broadcast with the task); exact intersects for every type pair. */
-  def featuresIntersectingWkt(features: DataFrame, geoJsonCol: String,
-                              wkt: String): DataFrame =
-    featuresIntersectingGeometry(features, geoJsonCol, Geo.parseWkt(wkt))
-
   /** Same predicate over an already-parsed query geometry — the funnel
     * every find_places input form (bbox / WKT / posted GeoJSON) reaches
     * (places.py:64-94). */

@@ -54,7 +54,6 @@ object Flac {
       q
     }
     def alignByte(): Unit = pos = (pos + 7) & ~7L
-    def bytePos: Int = (pos >> 3).toInt
     def remainingBits: Long = b.length.toLong * 8 - pos
   }
 

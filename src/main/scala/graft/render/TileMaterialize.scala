@@ -167,31 +167,4 @@ object TileMaterialize {
     }
     written.value
   }
-
-  /** Batch writer over [[renderLevels]]: every member of `jobs` lands
-    * under `dirs(key)/<x>/<y>.png` from the ONE shared Spark job —
-    * executor-side writes, no driver fan-in. Returns tiles written. */
-  def writeLevelBatch(jobs: Seq[LevelJob], variable: String,
-                      dirs: Map[Int, String], tileW: Int, tileH: Int,
-                      mapping: ColorMapping, flipY: Boolean = false): Long = {
-    require(jobs.forall(j => dirs.contains(j.key)),
-      s"missing output dir for keys ${jobs.map(_.key).filterNot(dirs.contains)}")
-    val tiles = renderLevels(jobs, variable, tileW, tileH, mapping, flipY)
-    val spark = tiles.sparkSession
-    val confSer = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val written = spark.sparkContext.longAccumulator("tiles_written")
-    tiles.foreachPartition {
-      (it: Iterator[(Int, Int, Int, Array[Byte])]) =>
-        val conf = confSer.value
-        it.foreach { case (jk, tx, ty, png) =>
-          val p = new org.apache.hadoop.fs.Path(s"${dirs(jk)}/$tx/$ty.png")
-          val fs = p.getFileSystem(conf)
-          val out = fs.create(p, true)
-          try out.write(png) finally out.close()
-          written.add(1L)
-        }
-    }
-    written.value
-  }
 }

@@ -497,8 +497,8 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
     val extraSel = extraSelections(d, q)
     // key time in MICROseconds (getTime alone is millis — a sub-ms
     // time axis would alias two steps onto one cached tile)
-    val keyUs = t.getTime * 1000L + (t.getNanos / 1000) % 1000
-    val key = s"${d.id}/$v/$z/$x/$y/$keyUs/${m.vmin}/${m.vmax}/" +
+    val us = t.getTime * 1000L + (t.getNanos / 1000) % 1000
+    val key = s"${d.id}/$v/$z/$x/$y/$us/${m.vmin}/${m.vmax}/" +
       q.getOrElse("cbar", "") +
       extraSel.map { case (n, vv, _) => s"/$n=$vv" }.mkString
     tileCache.get(key) match {
@@ -520,34 +520,30 @@ class GraftServer(ctx: ServiceContext, port: Int = 0) {
         // dispatch); values identical to the Spark scan by
         // construction. Anything transformed has no storePath and
         // keeps the Spark path.
-        val direct = cube.storePath.flatMap { p =>
-          try {
-            val us = t.getTime * 1000L + (t.getNanos / 1000) % 1000
-            graft.sources.DirectWindow
-              .read(p, v, us, y * 256, x * 256, 256, 256,
-                extra = extraSel)
+        val png = trace.stage("render") {
+          val direct = cube.storePath.flatMap { p =>
+            try graft.sources.DirectWindow
+              .read(p, v, us, y * 256, x * 256, 256, 256, extra = extraSel)
               .map(winVals => Render.renderWindow(winVals, 256, 256,
                 m, flipY = cube.grid.latAscending))
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[tile] direct read failed for $key: $e")
-            None
+            catch { case scala.util.control.NonFatal(e) =>
+              System.err.println(s"[tile] direct read failed for $key: $e")
+              None
+            }
           }
+          direct.getOrElse(
+            // Spark path: one equality filter per extra dim — pushes to
+            // the store scan as a chunk-plane prune
+            Render.renderTile(planeFiltered(cube, extraSel), v, t, x, y,
+              256, 256, m, flipY = cube.grid.latAscending))
         }
-        val png = trace.stage("render")(direct.getOrElse(
-          // Spark path: one equality filter per extra dim — pushes to
-          // the store scan as a chunk-plane prune
-          Render.renderTile(planeFiltered(cube, extraSel), v, t, x, y,
-            256, 256, m, flipY = cube.grid.latAscending)))
         tileCache.put(key, png)
         trace.stage("send")(sendBytes(ex, 200, png, "image/png"))
     }
     trace.done()
   }
 
-  /** time-series rows → reference JSON shape (time_series.py:133-145) */
-  private def tsJson(df: org.apache.spark.sql.DataFrame): String =
-    Json.obj("results" -> Json.arr(df.collect().map(tsRowJson)))
-
+  /** time-series row → reference JSON shape (time_series.py:133-145) */
   private def tsRowJson(r: org.apache.spark.sql.Row): String =
     Json.obj(
       "date" -> Json.str(r.getAs[String]("date")),

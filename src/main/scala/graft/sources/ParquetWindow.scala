@@ -6,13 +6,18 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.column.page.PageReadStore
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.internal.filter2.columnindex.RowRanges
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType,
   PrimitiveType}
+
+import graft.cube.{CubeIngest, ExtraDim}
 
 /** Direct tile-window reads over graft's OWN ingested parquet layout
   * (SURVEY X5/X6; `CubeIngest.writeCube`) — the materialized-levels
@@ -47,20 +52,17 @@ private[graft] object ParquetWindow {
 
   private val DayUs = 86400000000L
 
-  private final case class FileMeta(schema: MessageType, createdBy: String,
-    footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
-
-  /** Ingest-layout geometry from `_graft_meta.json` (layout ≥ 2 only —
-    * the marker `CubeIngest.writeCube` stamps once its sort order is
+  /** Ingest-layout geometry from the sidecar (layout ≥ 2 only — the
+    * marker `CubeIngest.writeCube` stamps once its sort order is
     * trustworthy): grid dims, tile size, the row offset of each
     * (tile_y, tile_x) block in file order, and the extra non-spatial
-    * dims (name → coordinate values) a 4-D ingest recorded. */
+    * dims a 4-D ingest recorded. */
   private final case class StoreMeta(width: Int, height: Int,
       tileSize: Int, tilesX: Int, blockOffsets: Array[Long],
-      extraDims: Seq[(String, Seq[Double])] = Nil) {
+      extraDims: Seq[ExtraDim]) {
     /** rows of one (time, extra-dims…) plane */
     def planeRows: Long = width.toLong * height
-    def planeCount: Long = extraDims.map(_._2.length.toLong).product
+    def planeCount: Long = extraDims.map(_.values.length.toLong).product
     /** Row offset of the plane holding the selected extra-dim values
       * within one time step's run: the ingest sorts by the extra-dim
       * COLUMNS ascending (between time and the tile id), so planes lie
@@ -68,203 +70,178 @@ private[graft] object ParquetWindow {
       * value is not on its axis. */
     def planeRank(sel: Seq[Double]): Option[Long] = {
       var rank = 0L
-      extraDims.zip(sel).foreach { case ((_, values), v) =>
-        val sorted = values.sorted
-        val pos = sorted.indexOf(v)
+      extraDims.zip(sel).foreach { case (d, v) =>
+        val pos = d.values.sorted.indexOf(v)
         if (pos < 0) return None
-        rank = rank * values.length + pos
+        rank = rank * d.values.length + pos
       }
       Some(rank)
     }
   }
 
-  private val storeMetas = TrieMap.empty[String, Option[StoreMeta]]
+  private object StoreMeta {
+    def of(sc: CubeIngest.Sidecar): Option[StoreMeta] = {
+      val ts = sc.tileSize
+      sc.grid.filter(_ => sc.layout >= 2 && ts > 0).map { g =>
+        val (w, h) = (g.width, g.height)
+        val tilesX = (w + ts - 1) / ts
+        val tilesY = (h + ts - 1) / ts
+        val offs = new Array[Long](tilesY * tilesX + 1)
+        var acc = 0L
+        var i = 0
+        for (ty <- 0 until tilesY; tx <- 0 until tilesX) {
+          offs(i) = acc
+          acc += math.min(ts, h - ty * ts).toLong * math.min(ts, w - tx * ts)
+          i += 1
+        }
+        offs(i) = acc
+        StoreMeta(w, h, ts, tilesX, offs, sc.extraDims)
+      }
+    }
+  }
 
-  // sidecar extraDims parsed INDEPENDENTLY of StoreMeta validity: the
-  // 4-D refusal guard must hold even for stores whose layout/tileSize
-  // fails the StoreMeta parse (else an extra=Nil read on a degenerate
-  // 4-D sidecar would silently overlay every plane)
-  private val sidecarExtras =
-    TrieMap.empty[String, Seq[(String, Seq[Double])]]
+  /** One store's read state, built on first use and dropped whole by
+    * [[invalidate]]: its Hadoop conf, its sidecar, its per-date
+    * part-file lists and its per-file footers. Pooled readers are keyed
+    * by their owning handle, so dropping a handle finds its readers by
+    * identity. */
+  private final class Store(path: String) {
+    // a fresh Configuration lazily re-parses the Hadoop XML defaults on
+    // first use (~10-20 ms) — constructing one per tile request
+    // silently dominated the whole read
+    val conf: Configuration = {
+      val c = new Configuration()
+      BlobStore.optionsFor(path).foreach { case (k, v) => c.set(k, v) }
+      c
+    }
+    lazy val sidecar: Option[CubeIngest.Sidecar] = CubeIngest.readSidecar(path)
+    lazy val meta: Option[StoreMeta] = sidecar.flatMap(StoreMeta.of)
+    private val dateFiles = TrieMap.empty[String, Seq[Path]]
+    private val footers = TrieMap.empty[Path, ParquetMetadata]
 
-  private def parseExtraDims(n: com.fasterxml.jackson.databind.JsonNode)
-      : Seq[(String, Seq[Double])] =
-    Option(n.get("extraDims")).map(e =>
-      (0 until e.size()).map { i =>
-        val d = e.get(i)
-        d.get("name").asText() ->
-          (0 until d.get("values").size())
-            .map(d.get("values").get(_).asDouble()).toSeq
-      }.toSeq).getOrElse(Nil)
-
-  private def extrasOf(path: String): Seq[(String, Seq[Double])] =
-    sidecarExtras.getOrElseUpdate(path,
-      BlobStore.forStore(path).read("_graft_meta.json").map { b =>
-        try parseExtraDims(new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(new String(b, java.nio.charset.StandardCharsets.UTF_8)))
-        catch { case scala.util.control.NonFatal(_) => Nil }
-      }.getOrElse(Nil))
-
-
-  private def storeMeta(path: String): Option[StoreMeta] =
-    storeMetas.getOrElseUpdate(path,
-      BlobStore.forStore(path).read("_graft_meta.json").flatMap { b =>
-        try {
-          val n = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(new String(b, java.nio.charset.StandardCharsets.UTF_8))
-          val layout = Option(n.get("layout")).map(_.asInt).getOrElse(1)
-          val ts = Option(n.get("tileSize")).map(_.asInt).getOrElse(0)
-          val g = n.get("grid")
-          val extras = parseExtraDims(n)
-          if (layout < 2 || ts <= 0 || g == null) None
-          else {
-            val w = g.get("width").asInt()
-            val h = g.get("height").asInt()
-            val tilesX = (w + ts - 1) / ts
-            val tilesY = (h + ts - 1) / ts
-            val offs = new Array[Long](tilesY * tilesX + 1)
-            var acc = 0L
-            var i = 0
-            var ty = 0
-            while (ty < tilesY) {
-              var tx = 0
-              while (tx < tilesX) {
-                offs(i) = acc
-                acc += math.min(ts, h - ty * ts).toLong *
-                  math.min(ts, w - tx * ts)
-                i += 1
-                tx += 1
-              }
-              ty += 1
-            }
-            offs(i) = acc
-            Some(StoreMeta(w, h, ts, tilesX, offs, extras))
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
+    /** the `.parquet` part files of one `p_date=<date>` dir */
+    def partFiles(date: String): Seq[Path] =
+      dateFiles.getOrElseUpdate(date, {
+        val p = new Path(s"$path/p_date=$date")
+        val fs = p.getFileSystem(conf)
+        if (!fs.exists(p)) Nil
+        else fs.listStatus(p).toSeq
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          .map(_.getPath)
       })
 
-  // per-date-dir part-file listing and per-file schema: probed once,
-  // served per tile ([[StoreCache.invalidate]] drops them via the
-  // invalidate/clear hooks below)
-  private val fileLists = TrieMap.empty[String, Seq[Path]]
-  private val metas = TrieMap.empty[String, FileMeta]
+    def footer(file: Path): ParquetMetadata =
+      footers.getOrElseUpdate(file, {
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+        try r.getFooter finally r.close()
+      })
+  }
+
+  private val stores = TrieMap.empty[String, Store]
+
+  private def store(path: String): Store =
+    stores.getOrElseUpdate(path, new Store(path))
 
   // pooled open readers for the dense path: ParquetFileReader.open
   // costs ~10 ms even with a cached footer (codec/stream/allocator
   // setup) — random-access readFilteredRowGroup needs no cursor, so
-  // one long-lived reader per file serves every tile. Access is
+  // one long-lived reader per (file, column) serves every tile. One
+  // column per reader because a reader builds its per-row-group index
+  // store once, for the columns requested at that first use, and
+  // setRequestedSchema never rebuilds it: a reader shared across
+  // variables hands the second variable a null offset index. Access is
   // serialized per reader (decompressors are not thread-safe).
   //
-  // BOUNDED (round-17): a long-running tile server over a daily-
-  // partitioned multi-year store would otherwise accumulate one open
-  // fd per part file ever served, for the process lifetime, until
-  // EMFILE. The pool holds at most [[ReaderPoolCap]] readers; beyond
-  // it the least-recently-acquired are evicted. Eviction protocol:
-  // membership changes under [[poolLock]]; the evicted reader is
-  // closed under ITS OWN monitor (in-flight reads hold it, so a read
-  // always finishes on an open reader); readers re-check pool
-  // membership inside their monitor and re-acquire if they lost the
-  // race. Closing costs the next request on that file one ~10 ms
-  // reopen — bounded fds beat unbounded.
+  // BOUNDED: a long-running tile server over a daily-partitioned
+  // multi-year store would otherwise accumulate one open fd per part
+  // file ever served, for the process lifetime, until EMFILE. The pool
+  // holds at most [[ReaderPoolCap]] readers; beyond it the
+  // least-recently-acquired are evicted. Eviction protocol: membership
+  // changes under [[poolLock]]; the evicted reader is closed under ITS
+  // OWN monitor (in-flight reads hold it, so a read always finishes on
+  // an open reader); readers re-check pool membership inside their
+  // monitor and re-acquire if they lost the race. Closing costs the
+  // next request on that file one ~10 ms reopen — bounded fds beat
+  // unbounded. A read racing [[invalidate]] may pool one reader under
+  // the dropped handle; the bound closes it like any idle reader.
   private[graft] var ReaderPoolCap = 128 // var: test seam only
-  private val readers = TrieMap.empty[String, ParquetFileReader]
-  private val lastUsed = TrieMap.empty[String, Long]
-  private val useTick = new java.util.concurrent.atomic.AtomicLong
+  private type ReaderKey = (Store, Path, String)
   private val poolLock = new Object
-  // offset index per (file, column) — one footer-section parse; parsed
-  // DATA (not an open resource), so it survives reader eviction and a
-  // reopened reader reuses it
-  private val offsetIndexes = TrieMap.empty[(String, String), AnyRef]
+  // access-ordered: iteration starts at the least recently acquired
+  private val pool =
+    new java.util.LinkedHashMap[ReaderKey, ParquetFileReader](16, 0.75f, true)
 
-  /** get-or-open the pooled reader for `file`, touch its LRU stamp,
-    * and evict past the cap (never the reader just acquired). */
-  private def acquireReader(file: Path, conf: Configuration,
-                            fm: FileMeta): ParquetFileReader = {
-    val k = file.toString
+  /** get-or-open the pooled reader for one column of `file`, touch its
+    * LRU position, and evict past the cap (never the reader just
+    * acquired). */
+  private def acquireReader(k: ReaderKey, footer: ParquetMetadata,
+                            proj: MessageType): ParquetFileReader = {
     val (r, victims) = poolLock.synchronized {
-      val got = readers.getOrElseUpdate(k, {
-        val in = HadoopInputFile.fromPath(file, conf)
-        ParquetFileReader.open(in, fm.footer,
+      var got = pool.get(k)
+      if (got == null) {
+        val in = HadoopInputFile.fromPath(k._2, k._1.conf)
+        got = ParquetFileReader.open(in, footer,
           ParquetReadOptions.builder().build(), in.newStream())
-      })
-      lastUsed.put(k, useTick.incrementAndGet())
-      val vs =
-        if (readers.size <= ReaderPoolCap) Nil
-        else readers.keys.toSeq.filter(_ != k)
-          .sortBy(x => lastUsed.getOrElse(x, 0L))
-          .take(readers.size - ReaderPoolCap)
-          .flatMap { v =>
-            lastUsed.remove(v)
-            readers.remove(v)
-          }
-      (got, vs)
+        got.setRequestedSchema(proj)
+        pool.put(k, got)
+      }
+      (got, removeFromPool(_ => pool.size > ReaderPoolCap, keep = k))
     }
-    victims.foreach(rd => rd.synchronized {
-      try rd.close() catch { case scala.util.control.NonFatal(_) => () }
-    })
+    closeAll(victims)
     r
   }
 
-  private def dropReaders(pred: String => Boolean): Unit =
-    readers.keys.filter(pred).foreach { k =>
-      lastUsed.remove(k)
-      readers.remove(k).foreach(r => r.synchronized {
-        try r.close() catch { case scala.util.control.NonFatal(_) => () }
-      })
+  /** remove the entries `pick` selects, visiting the least recently
+    * acquired first; caller holds [[poolLock]] */
+  private def removeFromPool(pick: ReaderKey => Boolean,
+                             keep: ReaderKey = null): Seq[ParquetFileReader] = {
+    val out = Seq.newBuilder[ParquetFileReader]
+    val it = pool.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.getKey != keep && pick(e.getKey)) {
+        out += e.getValue
+        it.remove()
+      }
     }
-
-  private[graft] def invalidate(path: String): Unit = {
-    // metas/readers/offsetIndexes are keyed by listStatus paths, which
-    // the FileSystem scheme-qualifies ('file:/tmp/…' for a raw '/tmp/…'
-    // store) — matching the raw prefix alone would leak pooled open
-    // readers (fds on deleted part files) across a store rewrite
-    val prefixes = {
-      val qualified =
-        try {
-          val p = new Path(path)
-          p.getFileSystem(hadoopConf(path)).makeQualified(p).toString
-        } catch { case scala.util.control.NonFatal(_) => path }
-      Seq(path, qualified).distinct
-    }
-    def hit(k: String): Boolean = prefixes.exists(k.startsWith)
-    confs.remove(path)
-    fileLists.keys.filter(hit).foreach(fileLists.remove)
-    metas.keys.filter(hit).foreach(metas.remove)
-    storeMetas.keys.filter(hit).foreach(storeMetas.remove)
-    sidecarExtras.keys.filter(hit).foreach(sidecarExtras.remove)
-    offsetIndexes.keys.filter(k => hit(k._1)).foreach(offsetIndexes.remove)
-    dropReaders(hit)
+    out.result()
   }
 
-  /** test seam: paths of currently pooled open readers */
-  private[graft] def pooledReaderPaths: Set[String] = readers.keySet.toSet
-
-  private[graft] def clear(): Unit = {
-    confs.clear(); fileLists.clear(); metas.clear(); storeMetas.clear()
-    sidecarExtras.clear()
-    offsetIndexes.clear()
-    dropReaders(_ => true)
-  }
-
-  // memoized per store: a fresh Configuration lazily re-parses the
-  // Hadoop XML defaults on first use (~10-20 ms) — constructing one
-  // per tile request silently dominated the whole read
-  private val confs = TrieMap.empty[String, Configuration]
-
-  private def hadoopConf(path: String): Configuration =
-    confs.getOrElseUpdate(path, {
-      val c = new Configuration()
-      BlobStore.optionsFor(path).foreach { case (k, v) => c.set(k, v) }
-      c
+  private def closeAll(rs: Seq[ParquetFileReader]): Unit =
+    rs.foreach(r => r.synchronized {
+      try r.close() catch { case scala.util.control.NonFatal(_) => () }
     })
 
-  private def listParquet(dir: String, conf: Configuration): Seq[Path] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
+  private[graft] def invalidate(path: String): Unit =
+    stores.remove(path).foreach { s =>
+      closeAll(poolLock.synchronized(removeFromPool(_._1 eq s)))
+    }
+
+  /** test seam: paths of currently pooled open readers */
+  private[graft] def pooledReaderPaths: Set[String] =
+    poolLock.synchronized {
+      import scala.jdk.CollectionConverters._
+      pool.keySet.asScala.map(_._2.toString).toSet
+    }
+
+  private[graft] def clear(): Unit = {
+    stores.clear()
+    closeAll(poolLock.synchronized(removeFromPool(_ => true)))
+  }
+
+  /** the raw INT64 value a row group's `time` column holds in every
+    * row, None when its stats do not pin one */
+  private def pinnedTime(b: BlockMetaData): Option[Long] = {
+    import scala.jdk.CollectionConverters._
+    b.getColumns.asScala.find(_.getPath.toDotString == "time").flatMap { c =>
+      val st = c.getStatistics
+      if (st == null || st.isEmpty || !st.hasNonNullValue ||
+          st.getNumNulls > 0 || st.genericGetMin != st.genericGetMax) None
+      else st.genericGetMin match {
+        case l: java.lang.Long => Some(l.longValue())
+        case _ => None
+      }
+    }
   }
 
   /** Time axis from footer statistics alone — no Spark job, no data
@@ -275,55 +252,40 @@ private[graft] object ParquetWindow {
     * then costs footer reads (cached, needed for tile serving anyway)
     * instead of a cluster job. */
   def statsTimeAxis(path: String): Option[Seq[Long]] = {
-    val conf = hadoopConf(path)
+    val s = store(path)
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(s.conf)
     if (!fs.exists(root)) return None
-    val dateDirs = fs.listStatus(root).filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith("p_date="))
-    if (dateDirs.isEmpty) return None
+    val dates = fs.listStatus(root).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("p_date="))
+      .map(_.getPath.getName.stripPrefix("p_date="))
+    if (dates.isEmpty) return None
     import scala.jdk.CollectionConverters._
     val times = scala.collection.mutable.ArrayBuffer.empty[Long]
-    dateDirs.foreach { d =>
-      fs.listStatus(d.getPath)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .foreach { f =>
-          val fm = metas.getOrElseUpdate(f.getPath.toString, {
-            val r = ParquetFileReader.open(
-              HadoopInputFile.fromPath(f.getPath, conf))
-            try FileMeta(r.getFooter.getFileMetaData.getSchema,
-              r.getFooter.getFileMetaData.getCreatedBy, r.getFooter)
-            finally r.close()
-          })
-          val ti = try fm.schema.getFieldIndex("time")
-            catch { case _: Exception => return None }
-          val tf = fm.schema.getFields.get(ti)
-          if (!tf.isPrimitive) return None
-          val unit = tf.asPrimitiveType().getLogicalTypeAnnotation match {
-            case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-              ts.getUnit
-            case _ if tf.asPrimitiveType().getPrimitiveTypeName ==
-              PrimitiveType.PrimitiveTypeName.INT64 => null // bare us
-            case _ => return None // INT96 etc: no usable stats
-          }
-          fm.footer.getBlocks.asScala.foreach { b =>
-            val c = b.getColumns.asScala
-              .find(_.getPath.toDotString == "time").getOrElse(return None)
-            val st = c.getStatistics
-            if (st == null || st.isEmpty || !st.hasNonNullValue ||
-                st.getNumNulls > 0 || st.genericGetMin != st.genericGetMax)
-              return None
-            val raw = st.genericGetMin.asInstanceOf[java.lang.Long]
-              .longValue()
-            times += (unit match {
-              case null => raw
-              case LogicalTypeAnnotation.TimeUnit.MICROS => raw
-              case LogicalTypeAnnotation.TimeUnit.MILLIS => raw * 1000L
-              case LogicalTypeAnnotation.TimeUnit.NANOS =>
-                Math.floorDiv(raw, 1000L)
-            })
-          }
-        }
+    for (d <- dates; f <- s.partFiles(d)) {
+      val footer = s.footer(f)
+      val schema = footer.getFileMetaData.getSchema
+      val ti = try schema.getFieldIndex("time")
+        catch { case _: Exception => return None }
+      val tf = schema.getFields.get(ti)
+      if (!tf.isPrimitive) return None
+      val unit = tf.asPrimitiveType().getLogicalTypeAnnotation match {
+        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          ts.getUnit
+        case _ if tf.asPrimitiveType().getPrimitiveTypeName ==
+          PrimitiveType.PrimitiveTypeName.INT64 => null // bare us
+        case _ => return None // INT96 etc: no usable stats
+      }
+      footer.getBlocks.asScala.foreach { b =>
+        val raw = pinnedTime(b).getOrElse(return None)
+        times += (unit match {
+          case null => raw
+          case LogicalTypeAnnotation.TimeUnit.MICROS => raw
+          case LogicalTypeAnnotation.TimeUnit.MILLIS => raw * 1000L
+          case LogicalTypeAnnotation.TimeUnit.NANOS =>
+            Math.floorDiv(raw, 1000L)
+        })
+      }
     }
     if (times.isEmpty) None else Some(times.distinct.sorted.toSeq)
   }
@@ -344,36 +306,32 @@ private[graft] object ParquetWindow {
     // else refuses (None → Spark path) — a mismatched request must
     // never overlay planes, and an off-axis value must not serve a
     // silently-blank Some (the chunked-store path refuses likewise)
-    val declared = extrasOf(path)
-    if (declared.map(_._1) != extra.map(_._1)) return None
-    if (declared.zip(extra).exists { case ((_, values), (_, v)) =>
-        !values.contains(v) }) return None
+    val s = store(path)
+    val declared = s.sidecar.map(_.extraDims).getOrElse(Nil)
+    if (declared.map(_.name) != extra.map(_._1)) return None
+    if (declared.zip(extra).exists { case (d, (_, v)) =>
+        !d.values.contains(v) }) return None
     val date = java.time.LocalDate.ofEpochDay(Math.floorDiv(timeUs, DayUs))
-    val dateDir = s"$path/p_date=$date"
-    val conf = hadoopConf(path)
-    val files = fileLists.getOrElseUpdate(dateDir, listParquet(dateDir, conf))
+    val files = s.partFiles(date.toString)
     if (files.isEmpty) return None
     val out = Array.fill(h * w)(Double.NaN)
     files.foreach(f =>
-      readFile(path, f, conf, variable, timeUs, extra, y0, x0, h, w, out))
+      readFile(s, f, variable, timeUs, extra, y0, x0, h, w, out))
     Some(out)
   }
 
-  private def readFile(storePath: String, file: Path, conf: Configuration,
-                       variable: String, timeUs: Long,
+  private def readFile(s: Store, file: Path, variable: String, timeUs: Long,
                        extra: Seq[(String, Double)],
                        y0: Int, x0: Int, h: Int, w: Int,
                        out: Array[Double]): Unit = {
-    val fm = metas.getOrElseUpdate(file.toString, {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-      try FileMeta(r.getFooter.getFileMetaData.getSchema,
-        r.getFooter.getFileMetaData.getCreatedBy, r.getFooter)
-      finally r.close()
-    })
+    import scala.jdk.CollectionConverters._
+    val footer = s.footer(file)
+    val schema = footer.getFileMetaData.getSchema
+    val createdBy = footer.getFileMetaData.getCreatedBy
     // (getFields route: GroupType.getType(String) is overload-ambiguous
     // from Scala against MessageType.getType(String*))
     def field(n: String): org.apache.parquet.schema.Type =
-      fm.schema.getFields.get(fm.schema.getFieldIndex(n))
+      schema.getFields.get(schema.getFieldIndex(n))
     val timeField = field("time").asPrimitiveType()
     val proj = new MessageType("spark_schema", (Seq(field("time")) ++
       extra.map(e => field(e._1)) ++
@@ -410,51 +368,36 @@ private[graft] object ParquetWindow {
     // step (the typical one-step-per-day partition): the time column
     // need not be read at all — the predicate still guards correctness
     // when stats are absent (INT96) or spans are wider
-    val timeUniform = !timeIsInt96 && {
-      import scala.jdk.CollectionConverters._
-      fm.footer.getBlocks.asScala.forall { b =>
-        b.getColumns.asScala.find(_.getPath.toDotString == "time").exists {
-          c =>
-            val st = c.getStatistics
-            st != null && !st.isEmpty && st.hasNonNullValue &&
-              st.getNumNulls == 0 &&
-              st.genericGetMin == java.lang.Long.valueOf(rawTime) &&
-              st.genericGetMax == java.lang.Long.valueOf(rawTime)
-        }
-      }
-    }
+    val blocks = footer.getBlocks.asScala
+    val timeUniform = !timeIsInt96 &&
+      blocks.forall(b => pinnedTime(b).contains(rawTime))
     val opts = ParquetReadOptions.builder()
       .withRecordFilter(FilterCompat.get(pred))
       .build() // stats/dictionary/column-index filters all default on
-    val in = HadoopInputFile.fromPath(file, conf)
     // DENSE fast path: when the layout marker guarantees the sort
     // order, the time is pinned by stats, and the file holds exactly
     // one full grid (rows == W×H with unique (t,y,x) ⇒ dense), the
     // global row index alone determines the cell — decode ONLY the
     // value column, no y/x/time reads at all (~3× fewer column-reader
     // ops per row than the generic loop)
-    val totalRows = {
-      import scala.jdk.CollectionConverters._
-      fm.footer.getBlocks.asScala.map(_.getRowCount).sum
-    }
+    val totalRows = blocks.map(_.getRowCount).sum
     // single row group only: with one group, positions are row indexes
     // even when no page was filtered (absent row-index iterator); a
     // multi-group file keeps the generic path rather than guess bases.
     // 4-D stores stay dense too: the sort puts each extra-dim plane in
     // one contiguous planeRows-sized run (lexicographic by sorted
     // coordinate values), so the selected plane is a row-offset shift.
-    val sm = storeMeta(storePath)
-    val planeBase: Option[Long] = sm.flatMap { m =>
+    val planeBase: Option[Long] = s.meta.flatMap { m =>
       if (totalRows != m.planeRows * m.planeCount) None
       else m.planeRank(extra.map(_._2)).map(_ * m.planeRows)
     }
-    val dense = timeUniform && fm.footer.getBlocks.size() == 1 &&
-      planeBase.isDefined
-    if (dense && readFileDense(file, conf, fm, sm.get, variable,
+    val dense = timeUniform && blocks.size == 1 && planeBase.isDefined
+    if (dense && readFileDense(s, file, footer, s.meta.get, variable,
         planeBase.get, y0, x0, h, w, out))
       return
     // cached footer: no per-request footer IO/parse
-    val r = ParquetFileReader.open(in, fm.footer, opts, in.newStream())
+    val in = HadoopInputFile.fromPath(file, s.conf)
+    val r = ParquetFileReader.open(in, footer, opts, in.newStream())
     try {
       r.setRequestedSchema(proj)
       var pages = r.readNextFilteredRowGroup()
@@ -463,7 +406,7 @@ private[graft] object ParquetWindow {
         if (n > 0) {
           val crs = new ColumnReadStoreImpl(pages,
             new GroupRecordConverter(proj).getRootConverter, proj,
-            fm.createdBy)
+            createdBy)
           val cols = proj.getColumns
           val ne = extra.length
           val tr = if (timeUniform) null else crs.getColumnReader(cols.get(0))
@@ -525,18 +468,19 @@ private[graft] object ParquetWindow {
     * blocks, `RowRanges.create`) rather than via a filter predicate —
     * predicate columns outside the requested schema evaluate as
     * missing (= empty ranges), and the whole point of this path is to
-    * request ONLY the value column. */
-  /** returns false when the file lacks what the fast path needs (no
-    * offset index / unknown column) — the caller then runs the generic
-    * reader instead of serving an empty window */
-  private def readFileDense(file: Path, conf: Configuration, fm: FileMeta,
+    * request ONLY the value column. Returns false when the file lacks
+    * what the fast path needs (no offset index / unknown column) — the
+    * caller then runs the generic reader instead of serving an empty
+    * window. */
+  private def readFileDense(s: Store, file: Path, footer: ParquetMetadata,
                             m: StoreMeta, variable: String,
                             planeBase: Long,
                             y0: Int, x0: Int, h: Int, w: Int,
                             out: Array[Double]): Boolean = {
     import scala.jdk.CollectionConverters._
+    val schema = footer.getFileMetaData.getSchema
     val proj = new MessageType("spark_schema",
-      fm.schema.getFields.get(fm.schema.getFieldIndex(variable)))
+      schema.getFields.get(schema.getFieldIndex(variable)))
     val ts = m.tileSize
     val tyLo = math.max(y0, 0) / ts
     val tyHi = math.min(y0 + h - 1, m.height - 1) / ts
@@ -550,51 +494,45 @@ private[graft] object ParquetWindow {
       (planeBase + m.blockOffsets(bi),
         planeBase + m.blockOffsets(bi + 1) - 1)
     }).sorted
-    val block = fm.footer.getBlocks.get(0)
+    val block = footer.getBlocks.get(0)
     val rowCount = block.getRowCount
     val vChunk = block.getColumns.asScala
       .find(_.getPath.toDotString == variable).orNull
     if (vChunk == null) return false
-    // serialize per file: the pooled reader's stream/decompressors are
+    // serialize per reader: the pooled reader's stream/decompressors are
     // stateful; decompressed pages are consumed inside the lock too.
     // Membership is re-checked INSIDE the monitor: an evictor removes
     // from the pool first and only closes under this monitor, so a
     // reader still pooled while we hold its lock cannot be closed
     // under us; one that lost the race (evicted between acquire and
-    // lock — needs 128 other files touched in that window) is simply
-    // re-acquired.
-    val r = acquireReader(file, conf, fm)
+    // lock — needs ReaderPoolCap other readers touched in that window)
+    // is simply re-acquired.
+    val k: ReaderKey = (s, file, variable)
+    val r = acquireReader(k, footer, proj)
     r.synchronized {
-      if (!readers.get(file.toString).exists(_ eq r))
-        return readFileDense(file, conf, fm, m, variable, planeBase,
+      if (!poolLock.synchronized(pool.get(k) eq r))
+        return readFileDense(s, file, footer, m, variable, planeBase,
           y0, x0, h, w, out)
-      r.setRequestedSchema(proj)
-      val oi = offsetIndexes.getOrElseUpdate((file.toString, variable),
-        r.readOffsetIndex(vChunk)).asInstanceOf[
-        org.apache.parquet.internal.column.columnindex.OffsetIndex]
-      val pages =
-        if (oi == null) return false // no offset index: generic path
-        else {
-          def lastRow(p: Int): Long =
-            if (p + 1 < oi.getPageCount) oi.getFirstRowIndex(p + 1) - 1
-            else rowCount - 1
-          val sel = (0 until oi.getPageCount).filter { p =>
-            val lo = oi.getFirstRowIndex(p)
-            val hi = lastRow(p)
-            wanted.exists { case (a, b) => a <= hi && b >= lo }
-          }
-          (r.readFilteredRowGroup(0,
-            org.apache.parquet.internal.filter2.columnindex.RowRanges
-              .create(rowCount,
-                java.util.stream.IntStream.of(sel.toArray: _*).iterator(),
-                oi))): org.apache.parquet.column.page.PageReadStore
-        }
+      // null when the file has no offset index: generic path
+      val oi = r.getColumnIndexStore(0).getOffsetIndex(vChunk.getPath)
+      if (oi == null) return false
+      def lastRow(p: Int): Long =
+        if (p + 1 < oi.getPageCount) oi.getFirstRowIndex(p + 1) - 1
+        else rowCount - 1
+      val sel = (0 until oi.getPageCount).filter { p =>
+        val lo = oi.getFirstRowIndex(p)
+        val hi = lastRow(p)
+        wanted.exists { case (a, b) => a <= hi && b >= lo }
+      }
+      val pages: PageReadStore = r.readFilteredRowGroup(0,
+        RowRanges.create(rowCount,
+          java.util.stream.IntStream.of(sel.toArray: _*).iterator(), oi))
       if (pages == null) return false
       val n = pages.getRowCount
       if (n == 0) return true
       val crs = new ColumnReadStoreImpl(pages,
         new GroupRecordConverter(proj).getRootConverter, proj,
-        fm.createdBy)
+        footer.getFileMetaData.getCreatedBy)
       val cd = proj.getColumns.get(0)
       val vr = crs.getColumnReader(cd)
       val vDef = cd.getMaxDefinitionLevel

@@ -112,9 +112,6 @@ private[graft] object StoreCache {
     Some(data)
   }
 
-  private[graft] def cachedChunkBytes: Long =
-    chunkMap.synchronized(chunkBytes)
-
   /** drop everything cached under one store path (writers re-writing a
     * fixture, metadata invalidation hooks). This is THE invalidation
     * seam — every format-level cache hangs off it, so a caller that

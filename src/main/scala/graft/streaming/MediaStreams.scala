@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -65,17 +65,4 @@ object MediaStreams {
   def streamingMediaFeatures(items: Dataset[MediaItem])
       : Dataset[MediaFeatures] =
     Multimodal.extractMediaFeatures(items)
-
-  /** Running per-kind catalog: items seen, decode successes, ok
-    * fraction, mean bytes (complete-mode aggregate — the live version
-    * of [[Multimodal.featureSummary]]). */
-  def runningKindSummary(feats: Dataset[MediaFeatures]): DataFrame =
-    feats.toDF()
-      .groupBy(col("kind"))
-      .agg(count(lit(1)).as("n_items"),
-        sum(when(element_at(col("features"), 1) >= 0f, 1L).otherwise(0L))
-          .as("n_decode_ok"),
-        avg(col("nBytes")).as("avg_bytes"))
-      .withColumn("decode_ok_frac",
-        round(col("n_decode_ok") / col("n_items"), 6))
 }

@@ -82,6 +82,97 @@ class ParquetWindowSpec extends SparkSpec {
     assert(direct.sameElements(viaSparkPng))
   }
 
+  test("one part file serves alternating variables through the pooled " +
+      "dense path: v0, v1, v0 each match the Spark scan, zero jobs") {
+    // 256×256 cells = 65536 rows in one row group of eight 8192-row
+    // pages, so a 32×32 window selects a strict subset of pages and the
+    // reader consults its offset index (a one-page store takes parquet's
+    // whole-row-group shortcut and never does). A reader's per-row-group
+    // index store is built once, for the columns requested at its first
+    // use: a reader shared across variables hands v1 a null offset index
+    // after serving v0, and the read throws.
+    val grid = CubeGrid(256, 256, 0.0, 0.0, 0.1, latAscending = true)
+    val cube = Cube.synthetic(spark, grid, numTimes = 1, Seq("v0", "v1"),
+      nanEvery = 13)
+    val dir = java.nio.file.Files.createTempDirectory("graft-pw2v").toString
+    val store = s"$dir/c"
+    CubeIngest.writeCube(cube, store, tileSize = 32)
+    try {
+      val opened = CubeIngest.open(spark, store)
+      val t = opened.timeAxis.get.head
+      val us = t.getTime * 1000L + (t.getNanos / 1000) % 1000
+      // distinct windows per read: DirectWindow caches decoded windows
+      val reads = Seq(("v0", 0, 0), ("v1", 0, 0), ("v0", 96, 160),
+        ("v1", 224, 32))
+      val expected = reads.map { case (v, y0, x0) =>
+        opened.df
+          .filter(col("time") === lit(t) &&
+            col("y_idx") >= y0 && col("y_idx") < y0 + 32 &&
+            col("x_idx") >= x0 && col("x_idx") < x0 + 32)
+          .select(col("y_idx"), col("x_idx"), col(v)).collect()
+          .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+      }
+      val jobs = new AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(s: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val wins = try {
+        val got = reads.map { case (v, y0, x0) =>
+          graft.sources.DirectWindow.read(store, v, us, y0, x0, 32, 32).get
+        }
+        Thread.sleep(300) // listener events post asynchronously
+        got
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs.get() == 0, "direct window reads must schedule no job")
+      reads.zip(wins).zip(expected).foreach { case (((v, y0, x0), win), exp) =>
+        for (y <- 0 until 32; x <- 0 until 32) {
+          val e = exp.getOrElse((y0 + y, x0 + x), Double.NaN)
+          assert(java.lang.Double.compare(win(y * 32 + x), e) == 0,
+            s"$v cell (${y0 + y}, ${x0 + x})")
+        }
+      }
+    } finally {
+      graft.sources.StoreCache.invalidate(store)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("a sidecar the dense path cannot use still declares its extra " +
+      "dims: a read that does not name them refuses") {
+    val grid = CubeGrid(64, 32, 0.0, 0.0, 0.5, latAscending = true)
+    val cube = Cube.synthetic(spark, grid, numTimes = 1, Seq("v0"),
+      nanEvery = 9)
+    val dir = java.nio.file.Files.createTempDirectory("graft-pwsc").toString
+    val store = s"$dir/c"
+    CubeIngest.writeCube(cube, store, tileSize = 32)
+    try {
+      val t = CubeIngest.open(spark, store).timeAxis.get.head
+      val us = t.getTime * 1000L + (t.getNanos / 1000) % 1000
+      assert(graft.sources.ParquetWindow
+        .readWindow(store, "v0", us, 0, 0, 32, 32).isDefined)
+      // an old layout marker, no tile size and no grid turn the dense
+      // path off; the declared depth axis must still gate every read,
+      // else an extra=Nil read would overlay every plane
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$store/_graft_meta.json"),
+        """{"variables": ["v0"], "layout": 1, "extraDims":
+          | [{"name": "depth", "units": "m", "values": [5.0, 10.0]}]}"""
+          .stripMargin)
+      graft.sources.StoreCache.invalidate(store)
+      val sc = CubeIngest.readSidecar(store).get
+      assert(sc.grid.isEmpty && sc.layout == 1 && sc.tileSize == 0)
+      assert(sc.extraDims ==
+        Seq(graft.cube.ExtraDim("depth", Seq(5.0, 10.0), "m")))
+      assert(graft.sources.ParquetWindow
+        .readWindow(store, "v0", us, 0, 0, 32, 32).isEmpty)
+    } finally {
+      graft.sources.StoreCache.invalidate(store)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("generic path: sub-daily time steps share a date partition") {
     // two time steps on the SAME day defeat the dense fast path
     // (time stats not uniform, rows != one grid) — the generic

@@ -8,9 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.cube.{Cube, CubeGrid, CubeIngest}
 import graft.geo.Geo.{Polygon, Pt}
-import graft.operators.{Pyramid, Skew, TimeSeries}
-import graft.render.Render
-import graft.server.TileService
+import graft.operators.{Skew, TimeSeries}
 
 /** Assertions about the physical plans and layout — the properties that
   * make the same queries viable at 100 TB. */
@@ -164,20 +162,6 @@ class ScaleSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters: [isnotnull(bucket") ||
       plan.contains("PartitionFilters: [(bucket"),
       "bucket probe did not prune partitions:\n" + plan.take(800))
-  }
-
-  test("tile service routes z to the matching pyramid level") {
-    val grid = CubeGrid(32, 16, 0.0, 0.0, 1.0, latAscending = true)
-    val cube = Cube.synthetic(spark, grid, 1, Seq("v0"), nanEvery = 1000)
-    val levels = Pyramid.build(cube, Pyramid.Mean, tileW = 8, tileH = 8)
-    val svc = new TileService(levels, tileSize = 8)
-    assert(svc.numLevels == 3)
-    assert(svc.levelForZ(0).grid.width == 8)   // coarsest
-    assert(svc.levelForZ(2).grid.width == 32)  // finest
-    val t = cube.df.select(min("time")).collect()(0).getTimestamp(0)
-    val png = svc.renderTile("v0", t, z = 0, tileX = 0, tileY = 0,
-      Render.ColorMapping(0.0, 100.0, Render.GrayLike))
-    assert(png.take(4).toSeq == Seq(0x89.toByte, 'P'.toByte, 'N'.toByte, 'G'.toByte))
   }
 
   test("typed time-series surface (Dataset[TsPoint])") {
