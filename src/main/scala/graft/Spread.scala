@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Scan-parallelism heal (r17-opt; optimization-guide §2.5's
@@ -27,9 +25,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * (spark.sql.execution.sortBeforeRepartition, SPARK-23207) the heal
   * does not need, because the caller's key is deterministic per row.
   *
-  * The footer verdict is memoized per snapshot token and session
-  * parallelism (zero jobs on a hit — the ParquetStats dispatch-guard
-  * discipline used across the engine).
+  * The footer verdict is memoized per snapshot and heal width in
+  * [[SnapshotMemo]] (zero footer reads on a hit).
   */
 object Spread {
 
@@ -40,8 +37,6 @@ object Spread {
     * the local firing behavior (guard verdicts, result equality, the
     * reused exchange). */
   val EnabledConf = "spark.graft.spread"
-
-  private val memo = new ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** Heal width: the session's advertised parallelism capped at the
     * cgroup-aware core count the JVM can actually use (r18, VERDICT
@@ -65,14 +60,8 @@ object Spread {
     * layout). */
   def narrow(s: SparkSession, path: String): Boolean = {
     val par = width(s)
-    val key = path + "|" +
-      sources.ParquetStats.snapshotToken(s, path) + "|" + par
-    Option(memo.get(key)).map(_.booleanValue).getOrElse {
-      val v = sources.ParquetStats.rowGroupCount(s, path)
-        .exists(_ < par / 2)
-      if (memo.size > 256) memo.clear()
-      memo.put(key, v)
-      v
+    SnapshotMemo(s, path, ("Spread.narrow", par)) {
+      sources.ParquetStats.rowGroupCount(s, path).exists(_ < par / 2)
     }
   }
 

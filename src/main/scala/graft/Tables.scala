@@ -35,35 +35,20 @@ object Tables {
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
   }
 
-  /** Resolved-relation memo (r17-opt). `spark.read.parquet` pays
+  /** The resolved relation for `dir/name.parquet`, memoized per
+    * (session, snapshot) in [[SnapshotMemo]]. `spark.read.parquet` pays
     * schema inference (a synchronous footer read) plus file listing on
     * EVERY call — measured ~90 ms per call warm — and every query
     * construction re-reads its tables, so the bench paid it ~400
     * times per sitting. A resolved Dataset is an immutable logical
-    * plan (exactly what a catalog table reuses), so it is memoized per
-    * (session, path, file length, mtime): no row data is cached — the
-    * plan still scans parquet on every execution — and a republished
-    * file (new length/mtime) misses the memo, the same snapshot-key
-    * discipline as ParquetStats/DedupIndex. Bounded: cleared wholesale
-    * past 64 entries (stopped test sessions would otherwise pin their
-    * plans). */
-  private val relCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long, Long), DataFrame]()
-
+    * plan (exactly what a catalog table reuses): no row data is
+    * cached — the plan still scans parquet on every execution — and a
+    * file rewritten in place is a fresh snapshot, hence a miss. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     configure(spark)
     val path = s"$dir/$name.parquet"
-    val key = try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(p)
-      (spark, path, st.getLen, st.getModificationTime)
-    } catch { case _: Throwable => (spark, path, -1L, -1L) }
-    if (key._3 < 0) spark.read.parquet(path)
-    else {
-      if (relCache.size > 64) relCache.clear()
-      relCache.computeIfAbsent(key, _ => spark.read.parquet(path))
-    }
+    SnapshotMemo(spark, path, ("Tables.table", spark))(
+      spark.read.parquet(path))
   }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
@@ -82,8 +67,9 @@ object Tables {
     *
     * The driver has shipped the `ts` column under two physical types
     * across rounds — TIMESTAMP(NANOS) (read as epoch-nanos BIGINT via
-    * the `nanosAsLong` session flag, floor-truncated by `div 1000`
-    * exactly as DuckDB's `epoch_us` truncates TIMESTAMP_NS) and
+    * the `nanosAsLong` session flag, truncated toward zero by
+    * `div 1000` exactly as DuckDB's `epoch_us` truncates TIMESTAMP_NS,
+    * so −1,500 ns is −1 µs) and
     * TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ) — so the reader branches
     * on the type it actually finds rather than assuming one. The
     * session timezone is pinned to UTC, so the NTZ→LTZ cast is a

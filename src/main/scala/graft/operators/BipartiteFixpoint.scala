@@ -43,17 +43,6 @@ object BipartiteFixpoint {
     * `_dist` twins, never a wrapper that would smear the dispatch. */
   val DenseMaxPairs: Long = DenseGraph.DenseMaxPairs
 
-  /** Memoized guard verdicts per (corpus SNAPSHOT, bound) — same
-    * result contract as [[GraphEdges]] (a verdict only routes between
-    * row-identical plans, so a stale entry can never change results),
-    * but the key hashes path + length + mtime like the band-mass
-    * probe memo: on a dir whose data grew IN PLACE, a stale ACCEPT
-    * would otherwise re-collect a now-oversized distinct relation to
-    * the driver — a heap risk, not a wrong answer. A snapshot change
-    * is a clean memo miss. */
-  private val guardMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** Immutable driver-side bipartite graph: parity-encoded node ids
     * (sorted; index = dense id), CSR offsets + neighbor indices, and
     * the raw distinct (p, s) pair list for the peel kernel. */
@@ -76,7 +65,14 @@ object BipartiteFixpoint {
     * 32-bit-safe (footer min/max — zero jobs) → ONE packed collect of
     * the raw projection, sort + dedup on the driver. Fallback (footers
     * unavailable, or raw too big while the distinct may still fit): a
-    * memoized distinct count, then a distinct-exchange collect.
+    * distinct count, then a distinct-exchange collect. The verdict is
+    * memoized per (lineitem snapshot, bound) in [[graft.SnapshotMemo]]:
+    * a memoized REJECT skips the fast path's raw collect, which at sfs
+    * where the raw relation is collectable but its distinct exceeds
+    * the CSR bound would otherwise be paid on EVERY fixpoint call
+    * before falling back. A verdict only routes between row-identical
+    * plans; keyed by snapshot, a corpus that grew in place misses
+    * instead of re-collecting a now-oversized relation to the driver.
     * Returns None → caller takes the distributed form. */
   private def collectIfFits(s: SparkSession, d: String, maxPairs: Long)
       : Option[(Array[Long], Array[Long])] = {
@@ -89,21 +85,12 @@ object BipartiteFixpoint {
     } yield rows <= RawCollectMax &&
       pm._1 >= 0 && pm._2 < (1L << 31) &&
       sm._1 >= 0 && sm._2 < (1L << 32)).getOrElse(false)
-    val key = "lineitem-bipartite|" + d + "|" +
-      graft.sources.ParquetStats.snapshotToken(s, path) + "|" + maxPairs
-    // a memoized REJECT short-circuits both paths: at sfs where the raw
-    // relation is collectable but its distinct exceeds the CSR bound,
-    // the fast path would otherwise pay the ~raw·8B collect on EVERY
-    // fixpoint call before falling back — one wasted collect per
-    // (dir, bound) at most, and a stale verdict only routes between
-    // row-identical plans (same contract as the accept memo below).
-    if (Option(guardMemo.get(key)).exists(!_.booleanValue)) return None
-    if (fast) {
+    // the distinct relation packed p·2³² | s, sorted (fast path only)
+    lazy val packed: Array[Long] = {
       val raw = graft.Tables.lineitem(s, d)
         .select((col("l_partkey").cast("long") * lit(4294967296L) +
           col("l_suppkey").cast("long")).as("x"))
         .as[Long].collect()
-      if (raw.isEmpty) return None // empty: distributed form decides
       java.util.Arrays.sort(raw)
       var m = 0
       var i = 0
@@ -111,36 +98,26 @@ object BipartiteFixpoint {
         if (m == 0 || raw(m - 1) != raw(i)) { raw(m) = raw(i); m += 1 }
         i += 1
       }
-      if (m > maxPairs) { // distinct still too big for a CSR
-        guardMemo.put(key, java.lang.Boolean.FALSE)
-        return None
-      }
-      val ps = new Array[Long](m)
-      val ss = new Array[Long](m)
-      i = 0
-      while (i < m) {
-        ps(i) = raw(i) >>> 32
-        ss(i) = raw(i) & 0xffffffffL
-        i += 1
-      }
-      return Some((ps, ss))
+      java.util.Arrays.copyOf(raw, m)
     }
     val pairs = graft.Tables.lineitem(s, d)
       .select(col("l_partkey").cast("long").as("p"),
         col("l_suppkey").cast("long").as("s"))
       .distinct()
-    val fits = Option(guardMemo.get(key)).map(_.booleanValue).getOrElse {
-      val ok = pairs.limit((maxPairs + 1).toInt).count() <= maxPairs
-      guardMemo.put(key, ok)
-      ok
+    val fits = graft.SnapshotMemo(s, path,
+        ("BipartiteFixpoint.fits", maxPairs)) {
+      if (fast) packed.length <= maxPairs
+      else pairs.limit((maxPairs + 1).toInt).count() <= maxPairs
     }
+    // empty relation: the dense kernels would divide by n = 0 / call
+    // min on an empty frontier — let the distributed twin return its
+    // empty frame gracefully
     if (!fits) None
-    else {
+    else if (fast) {
+      if (packed.isEmpty) None
+      else Some((packed.map(_ >>> 32), packed.map(_ & 0xffffffffL)))
+    } else {
       val rows = pairs.as[(Long, Long)].collect()
-      // empty relation: the dense kernels would divide by n = 0 /
-      // call min on an empty frontier — mirror the fast path's
-      // raw.isEmpty and let the distributed twin return its empty
-      // frame gracefully.
       if (rows.isEmpty) None
       else Some((rows.map(_._1), rows.map(_._2)))
     }

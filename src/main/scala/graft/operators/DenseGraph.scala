@@ -44,14 +44,6 @@ object DenseGraph {
     * [[DenseMaxPairs]] — real basket data has exactly that shape. */
   val DenseMaxFanout: Long = 1L << 26
 
-  /** Memoized guard verdicts per `memoKey` — same contract as
-    * [[GraphEdges.probeMemo]]: the verdict only routes between two
-    * row-identical plans (dense CSR vs distributed fallback), so a
-    * stale entry can never change results; callers key it to an
-    * immutable dataset snapshot. */
-  private val guardMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** Source-parquet footer hint for the zero-job guard:
     * (path, orderCol, partCol). With footers present, the row count
     * and key ranges come straight from row-group metadata, so the
@@ -71,14 +63,17 @@ object DenseGraph {
     * all-rows exchange) with one scan-and-collect: measured 2–4 s →
     * ~1 s at sf0.1 on the co-purchase projection.
     *
-    * Fallback (no footers — derived frames, tests): the memoized
-    * one-aggregate guard (raw rows, raw fan-out overestimate, key
-    * ranges), then the same packed collect. The fan-out term catches
-    * the one-mega-order quadratic shape the row guard cannot see;
-    * raw counts only OVERestimate, so a conservative reject just
-    * routes to the distributed form. */
+    * Fallback (footers without statistics, or no hint — derived
+    * frames, tests): the one-aggregate guard (raw rows, raw fan-out
+    * overestimate, key ranges), then the same packed collect. The
+    * fan-out term catches the one-mega-order quadratic shape the row
+    * guard cannot see; raw counts only OVERestimate, so a conservative
+    * reject just routes to the distributed form. With a hint, the
+    * guard's verdict is memoized per snapshot of the hinted file
+    * ([[graft.SnapshotMemo]]): it only routes between two
+    * row-identical plans (dense CSR vs distributed fallback), so the
+    * memo can never change results. */
   private def collectPackedIfFits(s: SparkSession, pairs: DataFrame,
-                                  memoKey: Option[String],
                                   footer: Option[FooterHint])
       : Option[Array[Long]] = {
     import s.implicits._
@@ -92,27 +87,24 @@ object DenseGraph {
           om._1 >= 0 && om._2 < (1L << 31) &&
           pm._1 >= 0 && pm._2 < (1L << 32)
     }
-    val fits = fastVerdict.getOrElse {
-      memoKey.flatMap(k => Option(guardMemo.get(k)))
-        .map(_.booleanValue).getOrElse {
-          // row guard caps k at 2²², so k·(k−1) stays far below Long
-          // overflow; the product is even, so the shift is exact
-          val st = pairs.groupBy(col("o"))
-            .agg(count(lit(1)).as("k"), max(col("p")).as("mp"),
-              min(col("p")).as("np"))
-            .agg(sum(col("k")),
-              sum(shiftright(col("k") * (col("k") - lit(1L)), 1)),
-              max(col("o")), min(col("o")), max(col("mp")),
-              min(col("np"))).first()
-          val ok = !st.isNullAt(0) &&
-            st.getLong(0) <= DenseMaxPairs &&
-            st.getLong(1) <= DenseMaxFanout &&
-            st.getLong(3) >= 0 && st.getLong(2) < (1L << 31) &&
-            st.getLong(5) >= 0 && st.getLong(4) < (1L << 32)
-          memoKey.foreach(k => guardMemo.put(k, ok))
-          ok
-        }
+    def guard(): Boolean = {
+      // row guard caps k at 2²², so k·(k−1) stays far below Long
+      // overflow; the product is even, so the shift is exact
+      val st = pairs.groupBy(col("o"))
+        .agg(count(lit(1)).as("k"), max(col("p")).as("mp"),
+          min(col("p")).as("np"))
+        .agg(sum(col("k")),
+          sum(shiftright(col("k") * (col("k") - lit(1L)), 1)),
+          max(col("o")), min(col("o")), max(col("mp")),
+          min(col("np"))).first()
+      !st.isNullAt(0) &&
+        st.getLong(0) <= DenseMaxPairs &&
+        st.getLong(1) <= DenseMaxFanout &&
+        st.getLong(3) >= 0 && st.getLong(2) < (1L << 31) &&
+        st.getLong(5) >= 0 && st.getLong(4) < (1L << 32)
     }
+    val fits = fastVerdict.getOrElse(footer.fold(guard())(hint =>
+      graft.SnapshotMemo(s, hint._1, ("DenseGraph.guard", hint))(guard())))
     if (!fits) return None
     val raw = pairs
       .select((col("o").cast("long") * lit(4294967296L) +
@@ -335,11 +327,10 @@ object DenseGraph {
     * big to collect or one mega-order would make the CSR edge
     * expansion quadratic. */
   def densePath(s: SparkSession, pairs: DataFrame, k: Int = 20,
-                memoKey: Option[String] = None,
                 footer: Option[FooterHint] = None)
       : Option[DataFrame] = {
     import s.implicits._
-    val opOpt = collectPackedIfFits(s, pairs, memoKey, footer)
+    val opOpt = collectPackedIfFits(s, pairs, footer)
     if (opOpt.isEmpty) return None
     val csr = buildCsr(opOpt.get)
     val bc = s.sparkContext.broadcast(csr)
@@ -383,10 +374,9 @@ object DenseGraph {
     * support floor `minCount`. */
   def assocRulesDense(s: SparkSession, pairs: DataFrame, k: Int = 25,
                       minCount: Long = 3L,
-                      memoKey: Option[String] = None,
                       footer: Option[FooterHint] = None)
       : Option[DataFrame] = {
-    val opOpt = collectPackedIfFits(s, pairs, memoKey, footer)
+    val opOpt = collectPackedIfFits(s, pairs, footer)
     if (opOpt.isEmpty) return None
     val op = opOpt.get
     val m = op.length
@@ -492,11 +482,10 @@ object DenseGraph {
     * to the distributed join+argmax form. Returns the top-k communities
     * by (members desc, label). */
   def communitiesDense(s: SparkSession, pairs: DataFrame, k: Int = 20,
-                       memoKey: Option[String] = None,
                        footer: Option[FooterHint] = None)
       : Option[DataFrame] = {
     import s.implicits._
-    val opOpt = collectPackedIfFits(s, pairs, memoKey, footer)
+    val opOpt = collectPackedIfFits(s, pairs, footer)
     if (opOpt.isEmpty) return None
     val csr = buildCsr(opOpt.get)
     val n = csr.ids.length
@@ -558,11 +547,10 @@ object DenseGraph {
     * keyed sum merges them. Returns the top-20 by
     * (n_triangles desc, part_id). */
   def trianglesDense(s: SparkSession, pairs: DataFrame, k: Int = 20,
-                     memoKey: Option[String] = None,
                      footer: Option[FooterHint] = None)
       : Option[DataFrame] = {
     import s.implicits._
-    val opOpt = collectPackedIfFits(s, pairs, memoKey, footer)
+    val opOpt = collectPackedIfFits(s, pairs, footer)
     if (opOpt.isEmpty) return None
     val csr = buildCsr(opOpt.get)
     val bc = s.sparkContext.broadcast(csr)

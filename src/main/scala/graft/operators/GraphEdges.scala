@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * not free, but the only cost the cold path pays: with no hot orders
   * the expansion plan itself is byte-identical to the naive
   * co-partitioned self-join, and callers that share a corpus can share
-  * the probe's verdict via `memoKey` (the four co-purchase queries
-  * do), so the scan+aggregate runs once per dataset, not once per
+  * the probe's verdict via `memoPath` (the four co-purchase queries
+  * do), so the scan+aggregate runs once per snapshot, not once per
   * query. With hot orders, cold orders keep
   * the naive join and each hot order's pair space is CHUNK-PARTITIONED:
   * parts hash into ⌈k/Chunk⌉ buckets, the x-side replicates each row to
@@ -46,14 +46,6 @@ object GraphEdges {
     * ≈ Chunk² ≈ 2.6·10⁵ candidate pairs — seconds of work per task */
   val Chunk = 512
 
-  /** Memoized probe verdicts (hot orders present?) per `memoKey`. The
-    * verdict only ROUTES between two row-identical plans, so a stale
-    * entry can never change results — callers key it to an immutable
-    * dataset snapshot (here: the sf directory), which is also why the
-    * map needs no eviction at realistic key counts. */
-  private val probeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** One row per (order, unordered part pair): columns (o, a, b) with
     * a < b — exactly what the naive self-join emits, hot-order-safe.
     * `op` must already be the DISTINCT (o, p) projection; `probeRaw`
@@ -66,22 +58,21 @@ object GraphEdges {
     * (persisted once the probe says it is needed): the overestimate
     * only splits a hot order into slightly more, emptier chunks —
     * never an under-split — and the exact distinct-count aggregate
-    * disappears from the plan. `memoKey` (an immutable-snapshot
-    * identity, e.g. the dataset directory) shares the probe verdict
-    * across queries over the same corpus.
+    * disappears from the plan. `memoPath` names the parquet file both
+    * frames project (o, p) from; the probe verdict is then memoized
+    * per snapshot of that file ([[graft.SnapshotMemo]]) and shared by
+    * every caller passing it. The verdict only ROUTES between two
+    * row-identical plans, so the memo can never change results.
     * Returns the pair frame plus any persisted intermediates for the
     * caller to release after materializing. */
   def coPurchasePairs(op: DataFrame, probeRaw: DataFrame,
-                      memoKey: Option[String] = None)
+                      memoPath: Option[String] = None)
       : (DataFrame, Seq[DataFrame]) = {
     val kRaw = probeRaw.groupBy(col("o")).agg(count(lit(1)).as("k"))
-    val anyHot = memoKey.flatMap(k => Option(probeMemo.get(k)))
-      .map(_.booleanValue).getOrElse {
-        val hot =
-          kRaw.filter(col("k") > HotOrderParts).limit(1).count() > 0
-        memoKey.foreach(k => probeMemo.put(k, hot))
-        hot
-      }
+    def probe() =
+      kRaw.filter(col("k") > HotOrderParts).limit(1).count() > 0
+    val anyHot = memoPath.fold(probe())(path => graft.SnapshotMemo(
+      probeRaw.sparkSession, path, "GraphEdges.anyHot")(probe()))
     if (!anyHot) {
       val pairs = op.as("x").join(op.as("y"),
           col("x.o") === col("y.o") && col("x.p") < col("y.p"))

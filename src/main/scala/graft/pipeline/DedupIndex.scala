@@ -41,16 +41,17 @@ object DedupIndex {
       sys.props("java.io.tmpdir") + "/graft_dedup_index_" +
         sys.props.getOrElse("user.name", "anon"))
 
-  /** Cache key for one corpus snapshot + operator variant. Filesystem
-    * metadata only — no Spark job. */
+  /** Cache key for one corpus snapshot + operator variant: the MD5 of
+    * `FormatVersion|variant|corpusPath|length|mtime`, with length and
+    * mtime from [[graft.SnapshotMemo.token]]. It names on-disk
+    * sidecars, so this string must not change. Filesystem metadata
+    * only — no Spark job. */
   def snapshotKey(spark: SparkSession, corpusPath: String,
                   variant: String): String = {
-    val p = new Path(corpusPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val cs = fs.getContentSummary(p)
-    val mtime = fs.getFileStatus(p).getModificationTime
+    val (len, mtime) = graft.SnapshotMemo.token(spark, corpusPath)
+      .getOrElse(throw new java.io.FileNotFoundException(corpusPath))
     val md = java.security.MessageDigest.getInstance("MD5")
-    val raw = s"$FormatVersion|$variant|$corpusPath|${cs.getLength}|$mtime"
+    val raw = s"$FormatVersion|$variant|$corpusPath|$len|$mtime"
     md.digest(raw.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 

@@ -236,29 +236,20 @@ object Similarity {
     * the `sim_ann_ivf_persisted` / `bitext_mine_ivf` pattern); here
     * it stays in-flight so the measured rows include the assignment
     * work they'd pay on a fresh snapshot. */
-  /** Probe verdicts memoized per corpus SNAPSHOT (the caller passes a
-    * [[DedupIndex.snapshotKey]]-style key hashing path + length +
-    * mtime): the probe is one corpus scan, and a repeat query over the
-    * same snapshot must not pay it again. Unlike the GraphEdges memo
-    * this verdict routes between DIFFERENT-result plans, so the key
-    * MUST change when the corpus does — snapshot keys do, an
-    * unchanged-corpus hit is exact, and with no key the probe simply
-    * runs live. */
-  private val overloadMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
+  /** `probePath` names the parquet file `emb` reads: the probe (one
+    * corpus scan) is then memoized per snapshot of that file
+    * ([[graft.SnapshotMemo]]), so a repeat query over the same snapshot
+    * does not pay it again. This verdict routes between
+    * DIFFERENT-result plans, so the key MUST change when the corpus
+    * does — a snapshot key does, an unchanged-snapshot hit is exact,
+    * and with no path the probe simply runs live. */
   def cosinePairsAuto(emb: DataFrame, idCol: String, vecCol: String,
                       threshold: Double,
-                      probeMemoKey: Option[String] = None): DataFrame = {
-    val overloaded = probeMemoKey match {
-      case Some(k) =>
-        Option(overloadMemo.get(k)).map(_.booleanValue).getOrElse {
-          val v = bandsOverloaded(emb, idCol, vecCol)
-          overloadMemo.put(k, v)
-          v
-        }
-      case None => bandsOverloaded(emb, idCol, vecCol)
-    }
+                      probePath: Option[String] = None): DataFrame = {
+    def probe() = bandsOverloaded(emb, idCol, vecCol)
+    val overloaded = probePath.fold(probe())(path =>
+      graft.SnapshotMemo(emb.sparkSession, path,
+        ("Similarity.bandsOverloaded", idCol, vecCol))(probe()))
     if (overloaded) cosinePairsCells(emb, idCol, vecCol, threshold)
     else cosinePairsLsh(emb, idCol, vecCol, threshold)
   }

@@ -537,8 +537,6 @@ object EngineQueries {
     // fan-out (the one-mega-order quadratic shape) is checked on the
     // driver before any CSR expansion; None = distributed form
     graft.operators.DenseGraph.densePath(s, proj,
-        memoKey = Some("lineitem-densegraph|" + d + "|" +
-          graft.sources.ParquetStats.snapshotToken(s, s"$d/lineitem.parquet")),
         footer = Some((s"$d/lineitem.parquet", "l_orderkey", "l_partkey")))
       .getOrElse(graphLinkPredictDistributed(s, d))
   }
@@ -575,8 +573,7 @@ object EngineQueries {
     val op = raw.distinct()
     val (opPairs, probed) =
       graft.operators.GraphEdges.coPurchasePairs(op, raw,
-        memoKey = Some("lineitem-copurchase|" + d + "|" +
-          graft.sources.ParquetStats.snapshotToken(s, s"$d/lineitem.parquet")))
+        memoPath = Some(s"$d/lineitem.parquet"))
     val released = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val e = opPairs.select(col("a"), col("b"))
       .distinct().persist()

@@ -349,11 +349,9 @@ object PipelineQueries {
   def dedupEmbCosine(s: SparkSession, d: String): DataFrame =
     Similarity.cosinePairsAuto(Tables.embeddings(s, d), "vec_id", "embedding",
         threshold = 0.4,
-        // snapshot-keyed probe memo: the band-mass scan runs once per
-        // corpus snapshot, not once per query (key hashes path +
-        // length + mtime, so a corpus change is a clean miss)
-        probeMemoKey = Some(graft.pipeline.DedupIndex.snapshotKey(
-          s, s"$d/embeddings.parquet", "band-mass-probe-v1")))
+        // the band-mass scan runs once per corpus snapshot, not once
+        // per query
+        probePath = Some(s"$d/embeddings.parquet"))
       .orderBy("id_a", "id_b")
 
   /** The banded-LSH route, un-dispatched — keeps the bounded-corpus
@@ -2744,30 +2742,20 @@ object PipelineQueries {
     graft.pipeline.Caching.materializeAndRelease(out)
   }
 
-  /** Learned-merge memo for the APPLICATION queries (r17-opt).
+  /** Learned merges for the APPLICATION queries (r17-opt).
     * tokenize_learned and tokenizer_fertility consume the rules the
     * way knn_classify consumes the session IVF assignment (the
     * r16-approved pattern): the rules are a deterministic pure
     * function of the corpus snapshot, so they are memoized per
-    * (dir, documents snapshot token) and the application queries
-    * measure tokenization economics, not training. Training cost
-    * stays on bpe_train's own row — it calls [[bpeLearnMerges]]
-    * live, never this memo. A republished corpus changes the
-    * snapshot token and retrains. */
-  private val bpeMergesMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, String, String, Long)]]()
-
+    * documents snapshot ([[graft.SnapshotMemo]]) and the application
+    * queries measure tokenization economics, not training. Training
+    * cost stays on bpe_train's own row — it calls [[bpeLearnMerges]]
+    * live, never this memo. A republished corpus is a new snapshot
+    * and retrains. */
   private def bpeMergesFor(s: SparkSession, d: String)
-      : Seq[(Int, String, String, Long)] = {
-    val key = d + "|" + graft.sources.ParquetStats
-      .snapshotToken(s, s"$d/documents.parquet")
-    Option(bpeMergesMemo.get(key)).getOrElse {
-      val v = bpeLearnMerges(s, d)
-      if (bpeMergesMemo.size > 64) bpeMergesMemo.clear()
-      bpeMergesMemo.put(key, v)
-      v
-    }
-  }
+      : Seq[(Int, String, String, Long)] =
+    graft.SnapshotMemo(s, s"$d/documents.parquet", "bpeMerges")(
+      bpeLearnMerges(s, d))
 
   /** The 6-step training loop shared by bpe_train and
     * tokenize_learned: the learned rules come back as DRIVER state
@@ -4825,8 +4813,6 @@ object PipelineQueries {
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
     // two-axis dense guard inside trianglesDense — see graphLinkPredict
     graft.operators.DenseGraph.trianglesDense(s, proj,
-        memoKey = Some("lineitem-densegraph|" + d + "|" +
-          graft.sources.ParquetStats.snapshotToken(s, s"$d/lineitem.parquet")),
         footer = Some((s"$d/lineitem.parquet", "l_orderkey", "l_partkey")))
       .getOrElse(graphTrianglesDistributed(s, d))
   }
@@ -4841,8 +4827,7 @@ object PipelineQueries {
     val op = raw.distinct()
     val (opPairs, probed) =
       graft.operators.GraphEdges.coPurchasePairs(op, raw,
-        memoKey = Some("lineitem-copurchase|" + d + "|" +
-          graft.sources.ParquetStats.snapshotToken(s, s"$d/lineitem.parquet")))
+        memoPath = Some(s"$d/lineitem.parquet"))
     val e = opPairs.select(col("a"), col("b"))
       .distinct().persist()
     val deg = e.select(col("a").as("v"))
@@ -4942,7 +4927,7 @@ object PipelineQueries {
     * graph_pagerank; exchanges carry integer ids only. The argmax per
     * vertex is a single max(struct(cnt, −label)) aggregate, not a
     * rank window. */
-  /** Dense-first dispatch: same guard + memo key as [[graphTriangles]]
+  /** Dense-first dispatch: same guard + footer hint as [[graphTriangles]]
     * (the co-purchase CSR is shared machinery), so one verdict
     * aggregate covers both; above the guard the distributed LPA below
     * runs, oracle-checked at every SF via `graph_communities_dist`. */
@@ -4950,8 +4935,6 @@ object PipelineQueries {
     val proj = Tables.lineitem(s, d)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
     graft.operators.DenseGraph.communitiesDense(s, proj,
-        memoKey = Some("lineitem-densegraph|" + d + "|" +
-          graft.sources.ParquetStats.snapshotToken(s, s"$d/lineitem.parquet")),
         footer = Some((s"$d/lineitem.parquet", "l_orderkey", "l_partkey")))
       .getOrElse(graphCommunitiesDistributed(s, d))
   }
@@ -4962,8 +4945,7 @@ object PipelineQueries {
     val op = raw.distinct()
     val (opPairs, probed) =
       graft.operators.GraphEdges.coPurchasePairs(op, raw,
-        memoKey = Some("lineitem-copurchase|" + d + "|" +
-          graft.sources.ParquetStats.snapshotToken(s, s"$d/lineitem.parquet")))
+        memoPath = Some(s"$d/lineitem.parquet"))
     val e = opPairs.select(col("a"), col("b")).distinct()
     val edges = e.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
@@ -5039,8 +5021,6 @@ object PipelineQueries {
     val proj = Tables.lineitem(s, d)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
     graft.operators.DenseGraph.assocRulesDense(s, proj,
-        memoKey = Some("lineitem-densegraph|" + d + "|" +
-          graft.sources.ParquetStats.snapshotToken(s, s"$d/lineitem.parquet")),
         footer = Some((s"$d/lineitem.parquet", "l_orderkey", "l_partkey")))
       .getOrElse(assocRulesDistributed(s, d))
   }
@@ -5056,8 +5036,7 @@ object PipelineQueries {
     // the per-pair count is the co-purchase order count as before
     val (opPairs, probed) =
       graft.operators.GraphEdges.coPurchasePairs(op, raw,
-        memoKey = Some("lineitem-copurchase|" + d + "|" +
-          graft.sources.ParquetStats.snapshotToken(s, s"$d/lineitem.parquet")))
+        memoPath = Some(s"$d/lineitem.parquet"))
     val pairs = opPairs
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_ab"))

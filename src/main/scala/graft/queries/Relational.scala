@@ -371,7 +371,7 @@ object Relational {
       .longMinMax(s, s"$d/events.parquet", "ts").map { case (mn, _) =>
         graft.Tables.table(s, d, "events").schema("ts").dataType match {
           case org.apache.spark.sql.types.LongType =>
-            Math.floorDiv(mn, 1000L) // stored nanos → ts_us
+            mn / 1000L // stored nanos → ts_us, truncated like `div`
           case _ => mn               // stored micros
         }
       }

@@ -59,20 +59,6 @@ object ParquetStats {
     }
   }
 
-  /** Snapshot token for guard-memo keys: total length + mtime of the
-    * file/dir (driver metadata only, no job, no footer reads). Memo
-    * entries keyed with this can never ride a stale verdict onto a
-    * corpus that grew in place — the token changes, the memo misses.
-    * Unreadable paths token as "nosnap" (the subsequent scan fails
-    * loudly anyway, so a collision there routes nothing). */
-  def snapshotToken(spark: SparkSession, pathStr: String): String =
-    try {
-      val p = new Path(pathStr)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val cs = fs.getContentSummary(p)
-      s"${cs.getLength}|${fs.getFileStatus(p).getModificationTime}"
-    } catch { case _: Exception => "nosnap" }
-
   /** Total rows from footers; None on any read failure. */
   def rowCount(spark: SparkSession, pathStr: String): Option[Long] =
     try Some(footers(spark, pathStr).map { fm =>

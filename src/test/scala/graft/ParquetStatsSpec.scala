@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.functions._
 
 import graft.sources.ParquetStats
 
@@ -86,5 +87,28 @@ class ParquetStatsSpec extends SparkSpec {
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/t.parquet")
     assert(ParquetStats.longMinMax(spark, s"$dir/t.parquet", "s").isEmpty)
     assert(ParquetStats.longMinMax(spark, s"$dir/t.parquet", "d").isEmpty)
+  }
+
+  test("session_window_overlap's footer t0 truncates pre-epoch nanos " +
+      "like Tables.events' ts_us") {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft-t0").toString
+    // int64 nanos: user 1 at −1,500 ns (ts_us −1, truncated like
+    // DuckDB's epoch_us), user 2 at 5,399,999,998 µs
+    writeParquetFile(Seq((1L, 1L, -1500L, 1.0),
+        (2L, 2L, 5399999998000L, 2.0))
+      .toDF("user_id", "event_id", "ts", "value"), s"$d/events.parquet")
+    assert(ParquetStats.longMinMax(spark, s"$d/events.parquet", "ts")
+      .contains((-1500L, 5399999998000L)))
+    val t0 = Tables.events(spark, d).agg(min(col("ts_us"))).first()
+      .getLong(0)
+    assert(t0 == -1L)
+    // window 0 is [t0, t0 + 5,400,000,000 µs): user 2's one-event
+    // session [5,399,999,998, +1) overlaps it only if the footer t0 is
+    // −1 (a floored −2 ends the window at 5,399,999,998), and user 1's
+    // session [−1, 0) only if t0 < 0 — so the one row pins t0 == −1
+    val rows = graft.queries.Relational.sessionWindowOverlap(spark, d)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(rows.toSeq == Seq((0L, 2L, 2L)))
   }
 }

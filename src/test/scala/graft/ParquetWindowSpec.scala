@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.cube.{Cube, CubeGrid, CubeIngest}
@@ -45,19 +42,9 @@ class ParquetWindowSpec extends SparkSpec {
         .flatMap(r => if (r.isNullAt(2)) None
           else Some((r.getInt(0), r.getInt(1)) -> r.getDouble(2))).toMap
       // serving read AFTER the Spark collect: count jobs around it
-      val jobs = new AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(s: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val win = try {
-        val got = graft.sources.ParquetWindow
-          .readWindow(s"$dir/c", v, us, y0, x0, h, w).get
-        Thread.sleep(300) // listener events post asynchronously
-        got
-      } finally spark.sparkContext.removeSparkListener(listener)
-      assert(jobs.get() == 0, "direct window read must schedule no job")
+      val (win, jobs) = jobsDuring(graft.sources.ParquetWindow
+        .readWindow(s"$dir/c", v, us, y0, x0, h, w).get)
+      assert(jobs == 0, "direct window read must schedule no job")
       for (y <- 0 until h; x <- 0 until w) {
         val expected = viaSpark.getOrElse((y0 + y, x0 + x), Double.NaN)
         assert(java.lang.Double.compare(win(y * w + x), expected) == 0,
@@ -112,20 +99,10 @@ class ParquetWindowSpec extends SparkSpec {
           .select(col("y_idx"), col("x_idx"), col(v)).collect()
           .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
       }
-      val jobs = new AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(s: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val wins = try {
-        val got = reads.map { case (v, y0, x0) =>
-          graft.sources.DirectWindow.read(store, v, us, y0, x0, 32, 32).get
-        }
-        Thread.sleep(300) // listener events post asynchronously
-        got
-      } finally spark.sparkContext.removeSparkListener(listener)
-      assert(jobs.get() == 0, "direct window reads must schedule no job")
+      val (wins, jobs) = jobsDuring(reads.map { case (v, y0, x0) =>
+        graft.sources.DirectWindow.read(store, v, us, y0, x0, 32, 32).get
+      })
+      assert(jobs == 0, "direct window reads must schedule no job")
       reads.zip(wins).zip(expected).foreach { case (((v, y0, x0), win), exp) =>
         for (y <- 0 until 32; x <- 0 until 32) {
           val e = exp.getOrElse((y0 + y, x0 + x), Double.NaN)

@@ -223,25 +223,16 @@ class ScaleSpec extends SparkSpec {
     val grid = CubeGrid(64, 32, 0.0, 40.0, 0.1, latAscending = true)
     val cube = Cube.synthetic(spark, grid, 3, Seq("v0"))
     CubeIngest.writeCube(cube, s"$dir/cube", tileSize = 16)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val ds = try {
+    val (ds, jobs) = jobsDuring {
       val opened = CubeIngest.open(spark, s"$dir/cube")
       val d = graft.server.RegisteredDataset("c", "C", opened, None)
       // force the lazily-resolved registration surface
       assert(d.timeCoords.size == 3)
       d.latestTime
       d.timeLabels
-      Thread.sleep(300) // listener events post asynchronously
       d
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 0,
-      s"layout-2 registration scheduled ${jobs.get()} Spark job(s)")
+    }
+    assert(jobs == 0, s"layout-2 registration scheduled $jobs Spark job(s)")
     assert(ds.timeCoords == ds.cube.timeAxis.get)
   }
 
